@@ -125,11 +125,12 @@ def _fresh_spark(
     return spark
 
 
-# 3 interleaved passes: on slow-JIT boots (see session_warm) the
-# CPU-heaviest graph queries only converge on their third run — run 9
-# measured the 65-query suite at 111 s best-of-2 vs 58 s converged;
-# pass 1 is effectively the compile pass, so best-of-3 is the smallest
-# selection that records steady-state on every boot mode seen so far
+# 3 interleaved passes: pass 1 is the compile pass (run 9 measured the
+# 65-query suite at 111 s best-of-2 vs 58 s converged). The slow later
+# passes seen under Spark's default 100-entry generated-code cache were
+# cache thrash, not slow convergence: the suite needs ~930 distinct
+# classes, so LRU evicted each one before its reuse and every pass
+# recompiled them all (get_spark sizes the cache at 4096 entries)
 QUERY_TRIALS = int(os.environ.get("SPARK_GRAFT_QUERY_TRIALS", "3"))
 
 

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.session import checkpoint_observed
+
 # same gate as pagerank: a (string id, string lbl) row is ~2x a rank
 # row, so halve the node budget
 _BCAST_MAX_NODES = 1_500_000
@@ -123,17 +125,18 @@ def min_label_propagation(
     # the two execution paths below could disagree on them);
     # endpoints_covered skips the 2|E|-row union legs (docstring).
     # The domain distinct and the rank dictionary are ONE fused
-    # range-shuffle (_order_rank dedups in place), materialized once:
-    # the gate count, round-0 labels, and the decode all re-read it —
-    # the string path simply ignores the rank column.
+    # range-shuffle (_order_rank dedups in place), materialized once
+    # (the gate count is observed by that same job): round-0 labels
+    # and the decode both re-read it — the string path simply ignores
+    # the rank column.
     ids_raw = nodes.select(F.col(id_col).alias("id"))
     if not endpoints_covered:
         ids_raw = ids_raw.union(pairs.select(F.col("u").alias("id"))).union(
             pairs.select(F.col("v").alias("id"))
         )
     parts = pairs.sparkSession.sparkContext.defaultParallelism
-    rank = _order_rank(ids_raw, parts).localCheckpoint(eager=True)
-    n_nodes = rank.count()
+    rank, m = checkpoint_observed(_order_rank(ids_raw, parts), n=F.count(F.lit(1)))
+    n_nodes = m["n"]
     use_dict = dict_encode if dict_encode is not None else (
         n_nodes <= _BCAST_MAX_NODES
     )

@@ -28,8 +28,10 @@ v loses one degree per (L, v) edge. So:
   pair list is COMPACTED (one anti-join rewrite, R resets to empty) —
   i.e. the operator degrades to exactly one r5-style round per gate
   overflow instead of broadcasting unbounded state;
-- termination = an empty frontier (the frontier count rides the same
-  <=|V|-row materialization that updates the degree vector).
+- termination = an empty frontier. The frontier count rides the same
+  <=|V|-row materialization that updates the degree vector (observed
+  by the checkpoint's own job, no count job), and the frontier itself
+  is a filter over that checkpointed vector, not a frame of its own.
 
 The r5 dictionary-encoded path is GONE: degree counting is
 count-by-key, which hash-aggregates fine on string keys (unlike
@@ -37,8 +39,6 @@ label-prop's ``min(<string>)``, which is why communities.py still
 encodes) — A/B at sf0.1/32 lanes the encoded path lost on wall every
 interleaved trial (7.2-7.9 s vs 3.6-5.9 s warm) because its ~6 fixed
 encode/decode jobs cannot amortize over a 3-round peel.
-``dict_encode`` is retained as a parameter for API compatibility and
-ignored (both values produce the identical single path).
 
 Rounds are data-bounded (the peel depth, a.k.a. degeneracy diameter),
 not fixed: ``max_rounds`` is a runaway guard, and hitting it raises
@@ -56,6 +56,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.session import checkpoint_observed
+
 # cumulative-removed-set broadcast gate: past this many peeled ids the
 # pair list is compacted (anti-join rewrite) and the set reset, so no
 # broadcast ever exceeds ~tens of MB of ids
@@ -68,22 +70,19 @@ def k_core(
     src_col: str = "source_id",
     dst_col: str = "target_id",
     max_rounds: int = 100,
-    dict_encode: bool | None = None,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Nodes of the k-core of the undirected simple graph induced by
     ``edges`` (direction, multi-edges, and self-loops collapsed), as
     ``(id, degree)`` with ``degree`` counted WITHIN the core. Empty
-    result when no k-core exists. ``dict_encode`` is accepted for
-    compatibility and ignored (see module docstring). ``pairs``
-    optionally supplies the canonical ``u < v`` distinct pair list as a
-    MATERIALIZED (persisted/checkpointed) frame — callers running
-    several undirected analytics share one pair list instead of paying
-    the |E|-row distinct per operator; it must equal exactly what this
-    function derives from ``edges`` itself."""
+    result when no k-core exists. ``pairs`` optionally supplies the
+    canonical ``u < v`` distinct pair list as a MATERIALIZED
+    (persisted/checkpointed) frame — callers running several undirected
+    analytics share one pair list instead of paying the |E|-row
+    distinct per operator; it must equal exactly what this function
+    derives from ``edges`` itself."""
     if k < 1:
         raise ValueError(f"k_core needs k >= 1, got {k}")
-    del dict_encode  # single execution path since r6 (module docstring)
     if pairs is None:
         s, d = F.col(src_col), F.col(dst_col)
         # canonical u<v pair list: ONE distinct over |E| rows,
@@ -94,24 +93,29 @@ def k_core(
             .distinct()
             .localCheckpoint(eager=True)
         )
+
+    def materialize(d: DataFrame) -> tuple[DataFrame, int]:
+        # the degree vector, checkpointed; the next frontier's size is
+        # observed by the same job
+        d, m = checkpoint_observed(d, n_low=F.count_if(F.col("degree") < k))
+        return d, m["n_low"]
+
     # full degree aggregation, exactly once: map-side partial count
     # bounds the shuffle at <=|V| rows regardless of |E|
-    deg = (
+    deg, n_low = materialize(
         pairs.select(F.col("u").alias("id"))
         .union(pairs.select(F.col("v").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint(eager=True)
     )
     removed: DataFrame | None = None  # cumulative peeled ids (broadcast side)
     n_removed = 0
     for _ in range(max_rounds):
-        # frontier: materialized so the termination count and the
-        # decrement joins read the same tiny frame
-        low = deg.filter(F.col("degree") < k).select("id").localCheckpoint(eager=True)
-        n_low = low.count()
         if n_low == 0:
             return deg
+        # frontier: a filter over the checkpointed degree vector, which
+        # the decrement joins below re-read (<=|V| rows each)
+        low = deg.filter(F.col("degree") < k).select("id")
         # decrements: for every ORIGINAL edge (u, v) with exactly one
         # endpoint in the frontier and the other endpoint still live,
         # the live endpoint loses one degree. Edges whose far endpoint
@@ -134,8 +138,11 @@ def k_core(
             .join(F.broadcast(gone), "id", "anti")
         )
         decr = touched.groupBy("id").agg(F.count(F.lit(1)).alias("_dec"))
-        deg = (
-            deg.join(F.broadcast(low), "id", "anti")
+        n_removed += n_low
+        deg, n_low = materialize(
+            # survivors: ids are unique in deg, so this is the anti-join
+            # against the frontier
+            deg.filter(F.col("degree") >= k)
             .join(F.broadcast(decr), "id", "left")
             .select(
                 "id",
@@ -143,15 +150,13 @@ def k_core(
                     "degree"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
-        n_removed += n_low
-        # NOT checkpointed: `gone` is a union of the (already
-        # checkpointed) per-round frontiers, so re-evaluating it inside
-        # next round's broadcast builds is a cheap cache-read union,
-        # while a checkpoint here cost one extra job per round; plan
-        # depth grows by one union per round, bounded by the peel depth
-        # and reset at every compaction
+        # NOT checkpointed: `gone` is a union of filters over the
+        # (already checkpointed) per-round degree vectors, so
+        # re-evaluating it inside next round's broadcast builds is a
+        # cheap cache-read union, while a checkpoint here cost one
+        # extra job per round; plan depth grows by one union per round,
+        # bounded by the peel depth and reset at every compaction
         removed = gone
         if n_removed > _BCAST_MAX_PEELED:
             # compact: one bounded anti-join rewrite of the pair list

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgw_spark.session import checkpoint_observed
+
 
 def effective_scale(n_nodes: int, scale: int, damping_num: int) -> int:
     """Largest power-of-10 ≤ ``scale`` with damping_num·N·scale < 2^63
@@ -90,8 +92,8 @@ def pagerank(
         edges = edges.select("source_id", "target_id").localCheckpoint(eager=True)
     else:
         edges = edges.select("source_id", "target_id")
-    nodes = _graph_parts(edges).localCheckpoint(eager=True)
-    n_nodes = nodes.count()
+    nodes, m = checkpoint_observed(_graph_parts(edges), n=F.count(F.lit(1)))
+    n_nodes = m["n"]
     scale = effective_scale(n_nodes, scale, damping_num)
     teleport = ((damping_den - damping_num) * scale) // damping_den
     ranks = nodes.withColumn("rank_scaled", F.lit(scale).cast("long"))

@@ -241,11 +241,12 @@ def k_hop(
     persisted ONCE per query (each of k levels scans the cached
     columns, not the upstream union/parquet twice); the frontier is
     force-broadcast behind an explicit count gate — its count is
-    already known from the previous level's emptiness check, so no
-    level ever shuffles the edge set while the frontier is small — and
-    only the per-level frontier is checkpointed (the visited set is a
-    cheap union of those ≤k tiny checkpointed frames, not re-
-    checkpointed every round).
+    already known from the previous level's emptiness check (observed
+    by the frontier's own checkpoint job, no count job), so no level
+    ever shuffles the edge set while the frontier is small — and only
+    the per-level frontier is checkpointed (the visited set is a cheap
+    union of those ≤k tiny checkpointed frames, not re-checkpointed
+    every round).
 
     ``pairs`` (r6): optional MATERIALIZED canonical ``u < v`` distinct
     pair list (the shared derived view, see kcore.k_core). BFS is
@@ -264,7 +265,7 @@ def k_hop(
         if own_persist
         else pairs
     )
-    from kgw_spark.session import local_df
+    from kgw_spark.session import checkpoint_observed, local_df
 
     seed = local_df(spark, [(node_id, 0)], "id string, hop int")
     frames = [seed]
@@ -279,14 +280,14 @@ def k_hop(
             fu, fv = F.broadcast(fu), F.broadcast(fv)
         fwd = e.join(fu, "u").select(F.col("v").alias("id"))
         bwd = e.join(fv, "v").select(F.col("u").alias("id"))
-        nxt = (
+        nxt, m = checkpoint_observed(
             fwd.union(bwd)
             .distinct()
             .join(visited.select("id"), "id", "left_anti")
-            .withColumn("hop", F.lit(hop))
-            .localCheckpoint(eager=True)
+            .withColumn("hop", F.lit(hop)),
+            n=F.count(F.lit(1)),
         )
-        frontier_n = nxt.count()
+        frontier_n = m["n"]
         if frontier_n == 0:
             break
         frames.append(nxt)

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -58,6 +58,13 @@ def get_spark(
         # pay ~4 CPU-s of import each, a per-worker tax that grows
         # with executor core count (see worker_daemon docstring)
         .config("spark.python.daemon.module", "kgw_spark.worker_daemon")
+        # generated-class cache (static conf, default 100): the nine
+        # kg_* graph queries compile ~220 distinct classes per pass and
+        # the 68-query __spark_entry__ suite ~930, so at 100 entries
+        # LRU evicts every class before its reuse and each pass
+        # recompiles all of them (Janino, then a fresh HotSpot JIT of
+        # the new bytecode). 4096 holds the whole suite with headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
@@ -102,6 +109,20 @@ def local_df(spark: SparkSession, rows, schema: str) -> "DataFrame":
         return df
     except Exception:
         return spark.createDataFrame([tuple(r) for r in rows], schema=st)
+
+
+def checkpoint_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` plus aggregate ``metrics``
+    over its rows (e.g. ``n=F.count(F.lit(1))``), computed by the
+    checkpoint's own job: the sizing/termination count of an iterative
+    operator then costs no Spark job of its own. The ``observe`` node
+    sits directly under the checkpoint, i.e. in the result stage, whose
+    accumulator updates Spark applies once per partition; a
+    shuffle-map stage may be re-run after a fetch failure and would
+    count twice. Returns ``(checkpointed frame, {name: value})``."""
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
+    return out.localCheckpoint(eager=True), obs.get
 
 
 def stop_spark() -> None:

@@ -308,3 +308,26 @@ def test_common_neighbors_plan_shape(spark):
     p = plan(E.queries()["kg_common_neighbors"](spark, SF))
     assert "sort_array" in p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+
+
+def test_graph_queries_reuse_generated_code(spark):
+    """A second pass of the nine kg_* graph queries compiles (almost)
+    no new generated classes: the codegen cache holds every class the
+    pass needs. At Spark's default cache size (100 entries, against
+    ~220 classes per pass) LRU evicted each class before its reuse and
+    every pass recompiled all of them."""
+    import __spark_entry__ as E
+
+    names = (
+        "kg_statistics", "kg_connected_components", "kg_k_hop",
+        "kg_pagerank", "kg_label_prop", "kg_kcore",
+        "kg_common_neighbors", "kg_triple_dedup", "kg_degree_histogram",
+    )
+    qs = E.queries()
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount
+    for _ in range(2):
+        before = compiles()
+        for name in names:
+            qs[name](spark, SF).collect()
+    assert compiles() - before <= 10

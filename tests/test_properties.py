@@ -4,7 +4,7 @@ beyond the reference's test strategy, which has no randomized testing
 
 import json
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from kgw_spark.functions.informative import is_informative_value
@@ -176,3 +176,71 @@ def test_merge_json_matches_dict_update(spark, base, ann):
     # byte equality whenever the merge path runs (non-trivial sides)
     if base and ann:
         assert got == _jdumps(expected)
+
+
+# random small multigraphs over a handful of ids: self-loops, duplicate
+# and reversed edges all occur, and the empty graph is included
+node_ids = st.sampled_from("abcdefg")
+edge_lists = st.lists(st.tuples(node_ids, node_ids), max_size=16)
+
+
+def _edges_df(spark, edge_list):
+    from kgw_spark.session import local_df
+
+    return local_df(spark, edge_list, "source_id string, target_id string")
+
+
+@given(edge_lists, st.integers(1, 4))
+@example([], 1)  # no nodes at all
+@example([("a", "b"), ("b", "c"), ("c", "a")], 2)  # round-0 frontier empty
+@example([("a", "b"), ("b", "c"), ("c", "a")], 3)  # core empty
+@example([("a", "a"), ("a", "b"), ("b", "a"), ("a", "b"), ("b", "b")], 1)
+@settings(max_examples=20, deadline=None)
+def test_k_core_matches_python(spark, edge_list, k):
+    """k_core == the pure-Python peeling replica; pins the termination
+    count observed on the degree checkpoint."""
+    from kgw_spark.operators.kcore import k_core, k_core_py
+
+    got = {r.id: r.degree for r in k_core(_edges_df(spark, edge_list), k=k).collect()}
+    assert got == k_core_py(edge_list, k=k)
+
+
+def _bfs(edge_list, start, k):
+    adj = {}
+    for u, v in edge_list:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    dist, frontier = {start: 0}, [start]
+    for hop in range(1, k + 1):
+        nxt = {m for n in frontier for m in adj.get(n, ()) if m not in dist}
+        dist.update((m, hop) for m in nxt)
+        frontier = nxt
+    return dist
+
+
+@given(edge_lists, node_ids, st.integers(1, 4), st.booleans())
+@example([], "a", 2, False)  # start node with no edges, empty graph
+@example([("b", "c")], "a", 2, True)  # start node outside the graph
+@example([("a", "a"), ("a", "b"), ("b", "a")], "a", 3, False)  # self-loop, dups
+@settings(max_examples=20, deadline=None)
+def test_k_hop_matches_bfs(spark, edge_list, start, k, shared_pairs):
+    """analytics.k_hop == a plain-Python BFS, with the edge set given
+    directly or as the shared canonical pair list; pins the frontier
+    count observed on each level's checkpoint."""
+    from pyspark.sql import functions as F
+
+    from kgw_spark.plans import analytics
+
+    edges = _edges_df(spark, edge_list)
+    pairs = None
+    if shared_pairs:
+        s, d = F.col("source_id"), F.col("target_id")
+        pairs = (
+            edges.filter(s != d)
+            .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    out = analytics.k_hop(edges, start, k, pairs=pairs).collect()
+    assert len(out) == len({r.id for r in out})
+    assert {r.id: r.hop for r in out} == _bfs(edge_list, start, k)
